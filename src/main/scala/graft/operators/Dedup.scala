@@ -435,61 +435,28 @@ object Dedup {
       .select("d1", "d2", "jaccard")
 
   /** Connected components over an undirected pair list (d1,d2): driver
-    * union-find below `driverThreshold` edges (exact, zero shuffles),
-    * else distributed min-label propagation WITH pointer jumping — the
+    * union-find when [[Bounded]] admits the pair list (exact, zero
+    * shuffles — after jaccard confirmation the edge set is orders of
+    * magnitude smaller than the corpus), else
+    * [[connectedComponentsDistributed]]. Returns (id, component) where
+    * component = min id of the cluster, ids in the coerced d1∪d2 type on
+    * both paths. */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame =
+    Bounded.longPairs(pairs, "d1", "d2") match {
+      case Some(edges) =>
+        DriverUnionFind.labels(pairs, "d1", "d2", edges, "id", "component")
+      case None => connectedComponentsDistributed(pairs, maxIter)
+    }
+
+  /** Distributed min-label propagation WITH pointer jumping — the
     * star-contraction-family combination that converges in O(log n)
     * rounds rather than O(diameter) (a long chain of templated near-dups
-    * resolves in ~log₂ hops). Returns (id, component) where component =
-    * min id of the cluster. The distributed path returns a
-    * localCheckpoint-backed frame: lineage-free, outside the session
-    * cache, blocks reclaimed by the ContextCleaner once dropped. */
-  def connectedComponents(
-      pairs: DataFrame, maxIter: Int = 10,
-      driverThreshold: Long = 1000000L): DataFrame = {
-    // After jaccard confirmation the edge set is orders of magnitude
-    // smaller than the corpus (only actual near-dups). Below the
-    // threshold a driver union-find is exact, allocation-light, and
-    // avoids maxIter shuffle rounds; the distributed label-propagation
-    // loop below remains the giant-graph path. 1M edges ≈ 30 MB of
-    // driver heap in the primitive-array union-find (r17 — the boxed
-    // Map form this replaces cost ~0.5 GB at the old 5M ceiling, a
-    // cluster-driver OOM shape).
-    val spark = pairs.sparkSession
-    // the driver union-find works on long ids; string/UUID ids would cast
-    // to null and NPE — route them to the type-agnostic distributed path
-    val integralIds = {
-      import org.apache.spark.sql.types._
-      pairs.schema.fields
-        .filter(f => f.name == "d1" || f.name == "d2")
-        .forall(f => Set[DataType](ByteType, ShortType, IntegerType, LongType)(f.dataType))
-    }
-    // single bounded action decides the path AND fetches the edges — a
-    // separate count() probe would cost one full extra pass over the
-    // (possibly expensive) upstream pipeline. Collected as a PRIMITIVE
-    // Dataset[(Long,Long)] (tuple encoder), not Rows: millions of boxed
-    // Rows with object headers cost hundreds of driver MB; primitive
-    // tuples are ~3× lighter and never materialize a GenericRow each
-    val bounded: Array[(Long, Long)] =
-      if (integralIds) {
-        import spark.implicits._
-        pairs.select(col("d1").cast("long"), col("d2").cast("long"))
-          .as[(Long, Long)]
-          .limit(DriverUnionFind.probeLimit(driverThreshold)).collect()
-      } else Array.empty
-    if (integralIds && bounded.length <= driverThreshold) {
-      val ids = DriverUnionFind.sortedIds(bounded)
-      val root = DriverUnionFind.unionAll(ids, bounded)
-      val rows = Array.tabulate(ids.length)(i => (ids(i), ids(root(i))))
-      import spark.implicits._
-      // cast back to the coerced d1∪d2 input type so the output schema no
-      // longer depends on which path the data size picks (r16 advisory)
-      val idType = pairs.select(col("d1"))
-        .union(pairs.select(col("d2"))).schema.head.dataType
-      return DriverUnionFind.datasetOf(spark, rows.toSeq)
-        .toDF("id", "component")
-        .select(col("id").cast(idType).as("id"),
-          col("component").cast(idType).as("component"))
-    }
+    * resolves in ~log₂ hops). Refuses to return a partial labelling when
+    * `maxIter` runs out. Returns a localCheckpoint-backed frame:
+    * lineage-free, outside the session cache, blocks reclaimed by the
+    * ContextCleaner once dropped. */
+  private[graft] def connectedComponentsDistributed(
+      pairs: DataFrame, maxIter: Int = 10): DataFrame = {
     val sym = pairs.select(col("d1"), col("d2"))
       .union(pairs.select(col("d2").as("d1"), col("d1").as("d2")))
       .distinct()
@@ -538,12 +505,11 @@ object Dedup {
       converged = !changed
       i += 1
     }
-    if (!converged)
-      System.err.println(
-        s"[graft] WARNING: connectedComponents did not converge in $maxIter " +
-          s"iterations (graph needs more than ~2^$maxIter-hop label reach); " +
-          "components may be split — raise maxIter")
     sym.unpersist(blocking = false)
+    require(converged,
+      s"connectedComponents: not converged after $maxIter iterations (the " +
+        s"graph needs more than ~2^$maxIter-hop label reach) — raise maxIter " +
+        "(a partial labeling would be a WRONG answer, not an approximate one)")
     comp
   }
 

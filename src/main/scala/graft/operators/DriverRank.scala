@@ -1,24 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, Row}
 
-/** Driver-side EXACT PageRank kernels over a BOUNDED edge list — the
-  * [[DriverUnionFind]] bounded-collect idiom applied to the rank fixed
-  * point (guide §5: the driver may do O(tiny) work when the distributed
-  * loop's cost is pure per-action overhead).
-  *
-  * Why this exists: the declared rank queries (g1/g2/g3) run over the
-  * event-type TRANSITION graph, whose size is bounded by the square of
-  * the event-type cardinality — a few dozen edges at ANY corpus scale.
-  * The distributed loop pays ~3 exchanges per iteration × 5–20
-  * iterations over those few rows: pure scheduling overhead (measured:
-  * g1 1.56 s / g2 1.47 s / g3 2.06 s at sf0.1·32c, ≥90% of it in
-  * per-action fixed cost). Below `driverThreshold` edges the fixed
-  * point runs here instead; ABOVE it — or for null ids, non-string/
-  * non-integral ids, or `exact = false` — the distributed loop runs
-  * unchanged.
+/** Driver-side EXACT PageRank kernels over a BOUNDED edge list, run
+  * when [[Bounded.rankEdges]] fetches the whole graph (the declared rank
+  * queries g1/g2/g3 iterate over event-type transition graphs of a few
+  * dozen edges at any corpus scale; see [[Bounded]] for the routing rule
+  * and the measured per-action overhead this avoids).
   *
   * EXACTNESS CONTRACT: only `exact = true` plans route here, because
   * only they define a reproducible float-op order. Every IEEE operation
@@ -36,12 +24,6 @@ import org.apache.spark.sql.types._
   *    expressions the distributed plan embeds as literals.
   * The DuckDB oracle re-checks g1/g2/g3 hashes every round, so a
   * divergence in any ulp fails the gate loudly.
-  *
-  * Scale safety: the default 100k-edge ceiling costs ~3 MB of driver
-  * heap in the index arrays (far below the [[DriverUnionFind]] 1M-edge
-  * ceiling, because ranks iterate — keep the driver's working set
-  * small); the output frame lifts through [[DriverUnionFind.datasetOf]]
-  * so no multi-million-row LocalRelation can enter a plan.
   */
 private[operators] object DriverRank {
 
@@ -65,98 +47,53 @@ private[operators] object DriverRank {
     * rank vector back to a (node, rank) frame in the coerced src∪dst
     * type. */
   private[operators] final case class Graphlet(
-      spark: SparkSession, n: Int,
+      n: Int,
       srcIdx: Array[Int], dstIdx: Array[Int], w: Array[Long],
       /** index of a SEED value (cast the same way as the edges), or -1
         * when the value labels no graph node. */
       seedIndex: Any => Int,
       toFrame: Array[Double] => DataFrame)
 
-  private val integralTypes: Set[DataType] =
-    Set(ByteType, ShortType, IntegerType, LongType)
-
-  /** True when two id columns are in the same driver-supported family
-    * (both strings, or both integral) — a cross-family pair would make
-    * the distributed join COERCE (e.g. string node vs int seed) in ways
-    * the driver kernel does not replicate, so such calls route
-    * distributed. */
-  private[operators] def sameIdFamily(a: DataType, b: DataType): Boolean =
-    (a == StringType && b == StringType) ||
-      (integralTypes.contains(a) && integralTypes.contains(b))
-
-  /** Bounded collect of the edge list, or None to route distributed:
-    * over `threshold` rows, any null endpoint/weight, or id types
-    * outside {string} / {byte,short,int,long}. The single `limit`-ed
-    * collect is both the size probe and the fetch — no extra pass. */
-  private[operators] def collect(
-      edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
-      threshold: Long): Option[Graphlet] = {
-    if (threshold <= 0) return None
+  /** The driver-resident graph of the edge rows [[Bounded.rankEdges]]
+    * fetched: (src, dst, w) with ids as string or long, w as long. */
+  private[operators] def graphlet(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      probe: Array[Row]): Graphlet = {
     val spark = edges.sparkSession
-    val sel = edges.select(col(srcCol), col(dstCol), col(weightCol))
-    val Seq(sT, dT, _) = sel.schema.fields.toSeq.map(_.dataType)
-    val strings = sT == StringType && dT == StringType
-    val ints = integralTypes.contains(sT) && integralTypes.contains(dT)
-    if (!strings && !ints) return None
-    val probe = (
-      if (ints)
-        edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"),
-          col(weightCol).cast("long"))
-      else
-        edges.select(col(srcCol), col(dstCol), col(weightCol).cast("long"))
-      ).limit(DriverUnionFind.probeLimit(threshold)).collect()
-    if (probe.length > threshold) return None
-    if (probe.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
-      return None
-    if (probe.isEmpty) return None // keep the distributed empty-input shape
+    import spark.implicits._
     val m = probe.length
     val srcIdx = new Array[Int](m)
     val dstIdx = new Array[Int](m)
-    val w = new Array[Long](m)
-    var i = 0
-    while (i < m) { w(i) = probe(i).getLong(2); i += 1 }
-    if (strings) {
+    val w = Array.tabulate(m)(i => probe(i).getLong(2))
+    // both paths emit the coerced src∪dst id type (the g9 schema rule)
+    def frame(rows: DataFrame) =
+      Bounded.castIds(rows.toDF("node", "rank"), edges, srcCol, dstCol, "node")
+    if (probe(0).get(0).isInstanceOf[String]) {
       val set = new java.util.TreeSet[String](utf8Order)
       probe.foreach { r => set.add(r.getString(0)); set.add(r.getString(1)) }
       val ids = set.toArray(new Array[String](0))
       val index = new java.util.HashMap[String, Integer](ids.length * 2)
       ids.zipWithIndex.foreach { case (s, j) => index.put(s, j) }
-      i = 0
+      var i = 0
       while (i < m) {
         srcIdx(i) = index.get(probe(i).getString(0))
         dstIdx(i) = index.get(probe(i).getString(1))
         i += 1
       }
-      val toFrame = (ranks: Array[Double]) => {
-        import spark.implicits._
-        DriverUnionFind
-          .datasetOf(spark, ids.toSeq.zip(ranks.toSeq))
-          .toDF("node", "rank")
-      }
       val seedIndex = (v: Any) => v match {
         case s: String => Option(index.get(s)).map(_.intValue).getOrElse(-1)
         case _ => -1
       }
-      Some(Graphlet(spark, ids.length, srcIdx, dstIdx, w, seedIndex, toFrame))
+      Graphlet(ids.length, srcIdx, dstIdx, w, seedIndex,
+        ranks => frame(Bounded.lift(spark, ids.toSeq.zip(ranks.toSeq)).toDF()))
     } else {
       val pairs = Array.tabulate(m)(j => (probe(j).getLong(0), probe(j).getLong(1)))
       val ids = DriverUnionFind.sortedIds(pairs)
-      i = 0
+      var i = 0
       while (i < m) {
         srcIdx(i) = DriverUnionFind.indexOf(ids, pairs(i)._1)
         dstIdx(i) = DriverUnionFind.indexOf(ids, pairs(i)._2)
         i += 1
-      }
-      // both paths emit the coerced src∪dst type (the g9/r16-advisory
-      // schema rule)
-      val nodeType = edges.select(col(srcCol).as("n"))
-        .union(edges.select(col(dstCol).as("n"))).schema.head.dataType
-      val toFrame = (ranks: Array[Double]) => {
-        import spark.implicits._
-        DriverUnionFind
-          .datasetOf(spark, ids.toSeq.zip(ranks.toSeq))
-          .toDF("node", "rank")
-          .select(col("node").cast(nodeType).as("node"), col("rank"))
       }
       def idxOf(l: Long): Int = {
         val j = DriverUnionFind.indexOf(ids, l)
@@ -169,7 +106,8 @@ private[operators] object DriverRank {
         case x: Long => idxOf(x)
         case _ => -1
       }
-      Some(Graphlet(spark, ids.length, srcIdx, dstIdx, w, seedIndex, toFrame))
+      Graphlet(ids.length, srcIdx, dstIdx, w, seedIndex,
+        ranks => frame(Bounded.lift(spark, ids.toSeq.zip(ranks.toSeq)).toDF()))
     }
   }
 

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Driver-side union-find over a BOUNDED edge list — the shared kernel
   * behind the small-graph shortcuts in [[Dedup.connectedComponents]],
-  * [[Graph.connectedComponents]] and `Similarity.dbscanLabels`.
+  * [[Graph.connectedComponents]] and `Similarity.dbscanLabels`, taken
+  * when [[Bounded.longPairs]] fetches the whole edge list.
   *
   * Scale-safety shape (r17): node ids are remapped through ONE sorted
   * primitive long array (binary search), parents live in an Int array,
@@ -71,25 +72,17 @@ private[operators] object DriverUnionFind {
     parent
   }
 
-  /** Lift driver-computed label rows into a Dataset WITHOUT embedding a
-    * giant LocalRelation in the plan: up to `localRelationMax` rows stay
-    * a LocalRelation (constant-folds, broadcasts, and keeps the
-    * LocalTableScan plan shape the small case wants); above it the rows
-    * ship through an RDD (`ExternalRDD` scan) so the analyzer/optimizer
-    * never walk a multi-million-row literal and the driver never pays a
-    * second copy inside the plan tree. */
-  def datasetOf[T: Encoder: scala.reflect.ClassTag](
-      spark: SparkSession, rows: Seq[T],
-      localRelationMax: Int = 10000): Dataset[T] =
-    if (rows.length <= localRelationMax) spark.createDataset(rows)
-    else {
-      val slices = math.max(1, math.min(
-        spark.sparkContext.defaultParallelism, rows.length / 100000 + 1))
-      spark.createDataset(spark.sparkContext.parallelize(rows, slices))
-    }
-
-  /** The clamped `limit(n)` for "collect at most threshold + 1 rows":
-    * `(threshold + 1).toInt` overflows negative for thresholds ≥ 2³¹. */
-  @inline def probeLimit(threshold: Long): Int =
-    math.min(threshold + 1L, Int.MaxValue.toLong).toInt
+  /** Connected-component labels of `pairs` (fetched from the (a, b)
+    * columns of `edges`): one (nodeCol, labelCol) row per endpoint,
+    * label = the component's min id, ids in the coerced a∪b type. */
+  def labels(edges: DataFrame, a: String, b: String,
+      pairs: Array[(Long, Long)], nodeCol: String, labelCol: String): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val ids = sortedIds(pairs)
+    val root = unionAll(ids, pairs)
+    val rows = Array.tabulate(ids.length)(i => (ids(i), ids(root(i))))
+    Bounded.castIds(Bounded.lift(spark, rows.toSeq).toDF(nodeCol, labelCol),
+      edges, a, b, nodeCol, labelCol)
+  }
 }

@@ -52,27 +52,29 @@ object Graph {
     * localCheckpoint (caller-owned: unpersist when done); every
     * intermediate checkpoint — superseded rank vectors, the node set,
     * the out-weighted edge frame — is released inside the loop, so a
-    * 50-iteration run holds exactly one rank-vector copy at any time. */
+    * 50-iteration run holds exactly one rank-vector copy at any time.
+    * An `exact` run over a graph [[Bounded]] admits computes the same
+    * bits on the driver ([[DriverRank]]). */
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       iterations: Int = 5, damping: Double = 0.85,
-      exact: Boolean = false, checkpoint: Boolean = false,
-      /** below this edge count an `exact = true` run computes the fixed
-        * point on the DRIVER ([[DriverRank]] — bit-identical IEEE op
-        * order, ~3 MB heap at the ceiling): the declared rank queries
-        * iterate over event-type transition graphs of a few dozen rows,
-        * where each distributed iteration is pure per-action overhead.
-        * Above the threshold, for `exact = false`, or for null/exotic
-        * ids the distributed loop runs unchanged. */
-      driverThreshold: Long = 100000L): DataFrame = {
+      exact: Boolean = false, checkpoint: Boolean = false): DataFrame = {
     require(iterations >= 1, "pageRank: iterations must be >= 1")
-    if (exact) {
-      val g0 = DriverRank.collect(edges, srcCol, dstCol, weightCol, driverThreshold)
-      if (g0.isDefined) {
-        val g = g0.get
-        return g.toFrame(DriverRank.fixed(g, iterations, damping))
-      }
+    Bounded.rankEdges(edges, srcCol, dstCol, weightCol, exact) match {
+      case Some(rows) =>
+        val g = DriverRank.graphlet(edges, srcCol, dstCol, rows)
+        g.toFrame(DriverRank.fixed(g, iterations, damping))
+      case None =>
+        pageRankDistributed(edges, srcCol, dstCol, weightCol, iterations,
+          damping, exact, checkpoint)
     }
+  }
+
+  /** [[pageRank]]'s distributed loop, whatever the input size. */
+  private[graft] def pageRankDistributed(
+      edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
+      iterations: Int = 5, damping: Double = 0.85,
+      exact: Boolean = false, checkpoint: Boolean = false): DataFrame = {
     val e = edges.select(
       col(srcCol).as("src"), col(dstCol).as("dst"),
       col(weightCol).cast("long").as("w"))
@@ -92,26 +94,7 @@ object Graph {
     var prev: DataFrame = null
     var i = 0
     while (i < iterations) {
-      val contribs = eo
-        .join(ranks, eo("src") === ranks("node"))
-        .select(col("dst"), col("src"),
-          (col("rank") * col("w").cast("double") / col("ow").cast("double"))
-            .as("contrib"))
-      val inc =
-        if (exact)
-          contribs.groupBy("dst").agg(
-            aggregate(
-              array_sort(collect_list(struct(col("src"), col("contrib")))),
-              lit(0.0),
-              (acc: Column, x: Column) => acc + x.getField("contrib"))
-              .as("inc"))
-        else
-          contribs.groupBy("dst").agg(sum("contrib").as("inc"))
-      val next = nodesP
-        .join(inc, nodesP("node") === inc("dst"), "left")
-        .select(col("node"),
-          (lit(teleport) + lit(damping) * coalesce(col("inc"), lit(0.0)))
-            .as("rank"))
+      val next = rankStep(nodesP, eo, ranks, damping, exact, lit(teleport))
       if (checkpoint) {
         val cp = next.localCheckpoint(eager = true)
         // the prior iteration's checkpoint blocks are dead the moment the
@@ -149,38 +132,32 @@ object Graph {
       iterations: Int = 10, damping: Double = 0.85,
       /** src-ordered incoming fold for bitwise oracle parity, as in
         * [[pageRank]]. */
-      exact: Boolean = false,
-      /** driver fixed point below this edge count for `exact = true`
-        * runs, as in [[pageRank]]; seeds must be bounded too and share
-        * the node id family, else the call routes distributed. */
-      driverThreshold: Long = 100000L): DataFrame = {
+      exact: Boolean = false): DataFrame = {
     require(iterations >= 1, "personalizedPageRank: iterations must be >= 1")
-    if (exact) {
-      val sT = edges.select(col(srcCol)).schema.head.dataType
-      val seedT = seeds.select(col(seedCol)).schema.head.dataType
-      val g0 =
-        if (DriverRank.sameIdFamily(sT, seedT))
-          DriverRank.collect(edges, srcCol, dstCol, weightCol, driverThreshold)
-        else None
-      if (g0.isDefined) {
-        val g = g0.get
-        // distinct in the ORIGINAL seed type (the distributed path's
-        // s.count()); null or over-threshold seed sets route distributed
-        val sDist = seeds.select(col(seedCol)).distinct()
-          .limit(DriverUnionFind.probeLimit(driverThreshold)).collect()
-        if (sDist.length <= driverThreshold && !sDist.exists(_.isNullAt(0))) {
-          val nSeeds = sDist.length
-          require(nSeeds >= 1, "personalizedPageRank: seeds must be non-empty")
-          val tele = new Array[Double](g.n)
-          sDist.foreach { r =>
-            val j = g.seedIndex(r.get(0))
-            if (j >= 0) tele(j) = 1.0 / nSeeds.toDouble
-          }
-          return g.toFrame(
-            DriverRank.personalized(g, tele, iterations, damping))
+    Bounded.seededRankEdges(edges, srcCol, dstCol, weightCol, seeds, seedCol,
+        exact) match {
+      case Some((rows, seedRows)) =>
+        val g = DriverRank.graphlet(edges, srcCol, dstCol, rows)
+        val nSeeds = seedRows.length
+        require(nSeeds >= 1, "personalizedPageRank: seeds must be non-empty")
+        val tele = new Array[Double](g.n)
+        seedRows.foreach { r =>
+          val j = g.seedIndex(r.get(0))
+          if (j >= 0) tele(j) = 1.0 / nSeeds.toDouble
         }
-      }
+        g.toFrame(DriverRank.personalized(g, tele, iterations, damping))
+      case None =>
+        personalizedPageRankDistributed(edges, srcCol, dstCol, weightCol,
+          seeds, seedCol, iterations, damping, exact)
     }
+  }
+
+  /** [[personalizedPageRank]]'s distributed loop, whatever the input size. */
+  private[graft] def personalizedPageRankDistributed(
+      edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
+      seeds: DataFrame, seedCol: String,
+      iterations: Int = 10, damping: Double = 0.85,
+      exact: Boolean = false): DataFrame = {
     val e = edges.select(
       col(srcCol).as("src"), col(dstCol).as("dst"),
       col(weightCol).cast("long").as("w"))
@@ -204,26 +181,8 @@ object Graph {
       .localCheckpoint(eager = true)
     var i = 0
     while (i < iterations) {
-      val contribs = eo
-        .join(ranks, eo("src") === ranks("node"))
-        .select(col("dst"), col("src"),
-          (col("rank") * col("w").cast("double") / col("ow").cast("double"))
-            .as("contrib"))
-      val inc =
-        if (exact)
-          contribs.groupBy("dst").agg(
-            aggregate(
-              array_sort(collect_list(struct(col("src"), col("contrib")))),
-              lit(0.0),
-              (acc: Column, x: Column) => acc + x.getField("contrib"))
-              .as("inc"))
-        else
-          contribs.groupBy("dst").agg(sum("contrib").as("inc"))
-      val next = nodesT
-        .join(inc, nodesT("node") === inc("dst"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) * col("tele") +
-            lit(damping) * coalesce(col("inc"), lit(0.0))).as("rank"))
+      val next = rankStep(nodesT, eo, ranks, damping, exact,
+          lit(1.0 - damping) * col("tele"))
         .localCheckpoint(eager = true)
       ranks.unpersist(blocking = false)
       ranks = next
@@ -247,20 +206,25 @@ object Graph {
         * [[pageRank]] — makes the CONVERGENCE STEP COUNT deterministic
         * too (the unordered sum's last-ulp jitter can flip a delta probe
         * sitting exactly at `tol`). */
-      exact: Boolean = false,
-      /** driver fixed point below this edge count for `exact = true`
-        * runs, as in [[pageRank]] — the block/delta/step-count logic is
-        * replicated exactly (max |Δ| is order-independent). */
-      driverThreshold: Long = 100000L): (DataFrame, Int) = {
-    if (exact) {
-      val g0 = DriverRank.collect(edges, srcCol, dstCol, weightCol, driverThreshold)
-      if (g0.isDefined) {
-        val g = g0.get
+      exact: Boolean = false): (DataFrame, Int) =
+    Bounded.rankEdges(edges, srcCol, dstCol, weightCol, exact) match {
+      case Some(rows) =>
+        val g = DriverRank.graphlet(edges, srcCol, dstCol, rows)
         val (ranks, done) =
           DriverRank.converged(g, tol, maxIterations, damping, blockIters)
-        return (g.toFrame(ranks), done)
-      }
+        (g.toFrame(ranks), done)
+      case None =>
+        pageRankConvergedDistributed(edges, srcCol, dstCol, weightCol, tol,
+          maxIterations, damping, blockIters, exact)
     }
+
+  /** [[pageRankConverged]]'s distributed block loop, whatever the input
+    * size. */
+  private[graft] def pageRankConvergedDistributed(
+      edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
+      tol: Double = 1e-6, maxIterations: Int = 50,
+      damping: Double = 0.85, blockIters: Int = 5,
+      exact: Boolean = false): (DataFrame, Int) = {
     // the edge scaffolding (node set, out-weights) is loop-INVARIANT —
     // build it ONCE instead of once per block (the old advance-per-block
     // shape re-derived the possibly-expensive upstream edge pipeline
@@ -284,32 +248,13 @@ object Graph {
       var cur = ranks
       var i = 0
       while (i < blockIters) {
-        val contribs = eo
-          .join(cur, eo("src") === cur("node"))
-          .select(col("dst"), col("src"),
-            (col("rank") * col("w").cast("double") / col("ow").cast("double"))
-              .as("contrib"))
-        val inc =
-          if (exact)
-            contribs.groupBy("dst").agg(
-              aggregate(
-                array_sort(collect_list(struct(col("src"), col("contrib")))),
-                lit(0.0),
-                (acc: Column, x: Column) => acc + x.getField("contrib"))
-                .as("inc"))
-          else
-            contribs.groupBy("dst").agg(sum("contrib").as("inc"))
         // NOTE (r16): a lazy-within-block variant (checkpoint only at
         // block end) was tried and MEASURED SLOWER on g3 (2.5 → 3.6 s —
         // the unrolled exact-mode aggregate trees cost more to optimize
         // and execute as one deep action than the per-iteration
         // materializations they replaced); per-iteration checkpoints
         // stay.
-        val next = nodes
-          .join(inc, nodes("node") === inc("dst"), "left")
-          .select(col("node"),
-            (lit(teleport) + lit(damping) * coalesce(col("inc"), lit(0.0)))
-              .as("rank"))
+        val next = rankStep(nodes, eo, cur, damping, exact, lit(teleport))
           .localCheckpoint(eager = true)
         // release superseded in-block checkpoints (never the block start,
         // which the delta probe still needs)
@@ -329,6 +274,35 @@ object Graph {
     nodes.unpersist(blocking = false)
     eo.unpersist(blocking = false)
     (ranks, done)
+  }
+
+  /** One distributed rank step over the out-weighted edge frame `eo`
+    * (src, dst, w, ow): next(node) = base + damping * Σ rank(src) * w /
+    * ow over the incoming edges. `exact` folds contributions in
+    * (src, contrib) order (bitwise-reproducible, the [[DriverRank]]
+    * contract); otherwise a plain map-side-combined sum. */
+  private def rankStep(
+      nodes: DataFrame, eo: DataFrame, ranks: DataFrame,
+      damping: Double, exact: Boolean, base: Column): DataFrame = {
+    val contribs = eo
+      .join(ranks, eo("src") === ranks("node"))
+      .select(col("dst"), col("src"),
+        (col("rank") * col("w").cast("double") / col("ow").cast("double"))
+          .as("contrib"))
+    val inc =
+      if (exact)
+        contribs.groupBy("dst").agg(
+          aggregate(
+            array_sort(collect_list(struct(col("src"), col("contrib")))),
+            lit(0.0),
+            (acc: Column, x: Column) => acc + x.getField("contrib"))
+            .as("inc"))
+      else
+        contribs.groupBy("dst").agg(sum("contrib").as("inc"))
+    nodes
+      .join(inc, nodes("node") === inc("dst"), "left")
+      .select(col("node"),
+        (base + lit(damping) * coalesce(col("inc"), lit(0.0))).as("rank"))
   }
 
   /** Advance an existing rank vector `start` by `iterations` steps over
@@ -352,26 +326,7 @@ object Graph {
     var ranks = start
     var i = 0
     while (i < iterations) {
-      val contribs = eo
-        .join(ranks, eo("src") === ranks("node"))
-        .select(col("dst"), col("src"),
-          (col("rank") * col("w").cast("double") / col("ow").cast("double"))
-            .as("contrib"))
-      val inc =
-        if (exact)
-          contribs.groupBy("dst").agg(
-            aggregate(
-              array_sort(collect_list(struct(col("src"), col("contrib")))),
-              lit(0.0),
-              (acc: Column, x: Column) => acc + x.getField("contrib"))
-              .as("inc"))
-        else
-          contribs.groupBy("dst").agg(sum("contrib").as("inc"))
-      val next = nodes
-        .join(inc, nodes("node") === inc("dst"), "left")
-        .select(col("node"),
-          (lit(teleport) + lit(damping) * coalesce(col("inc"), lit(0.0)))
-            .as("rank"))
+      val next = rankStep(nodes, eo, ranks, damping, exact, lit(teleport))
         .localCheckpoint(eager = true)
       // release superseded checkpoints (never the caller's start vector)
       if (i > 0) ranks.unpersist(blocking = false)
@@ -586,57 +541,29 @@ object Graph {
     * unpinned logical plan is O(4^rounds) nodes and the ANALYZER, which
     * runs before cache substitution, hangs long before execution would).
     * CONTRACT: the loud `not converged` refusal applies to the
-    * DISTRIBUTED loop only — the driver-side union-find below
-    * `driverThreshold` is exact by construction and never consults
-    * `maxRounds` (there is no partial answer it could return). Force
-    * `driverThreshold = 0` to exercise/pin the distributed refusal.
+    * DISTRIBUTED loop only — a graph [[Bounded]] admits is labelled by
+    * the driver-side union-find, exact by construction, which never
+    * consults `maxRounds` (there is no partial answer it could return).
+    * [[connectedComponentsDistributed]] pins the distributed refusal.
     * Both paths return the same (node, label) schema: ids keep the
     * coerced src∪dst input type. The returned frame is caller-owned. */
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxRounds: Int = 50,
-      /** below this edge count the labeling runs driver-side (the
-        * [[graft.operators.DriverUnionFind]] primitive-array idiom —
-        * min-id roots, exact): the pointer-jumping loop pays ~3 actions
-        * per round and log₂(diameter) rounds, all over a graph that
-        * after any real confirmation step is orders of magnitude
-        * smaller than the corpus (measured: g9 at sf0.1 ran 93 jobs
-        * over a 10k-edge graph). 1M edges ≈ 30 MB of driver heap in the
-        * primitive union-find (r17; the boxed-Map form this replaces
-        * cost ~0.5 GB at the old 5M ceiling — a cluster-driver OOM
-        * shape). Above the threshold, or for non-integral ids, the
-        * distributed loop runs unchanged. */
-      driverThreshold: Long = 1000000L): DataFrame = {
+      maxRounds: Int = 50): DataFrame = {
     require(maxRounds >= 1,
       s"connectedComponents: maxRounds must be >= 1, got $maxRounds")
-    val integralIds = {
-      import org.apache.spark.sql.types._
-      val types = edges.schema.fields
-        .filter(f => f.name == srcCol || f.name == dstCol).map(_.dataType)
-      types.nonEmpty &&
-        types.forall(Set[DataType](ByteType, ShortType, IntegerType, LongType))
+    Bounded.longPairs(edges, srcCol, dstCol) match {
+      case Some(pairs) =>
+        DriverUnionFind.labels(edges, srcCol, dstCol, pairs, "node", "label")
+      case None => connectedComponentsDistributed(edges, srcCol, dstCol, maxRounds)
     }
-    // coerced src∪dst type — both paths emit ids in THIS type, so the
-    // output schema no longer depends on which path the data size picks
-    lazy val nodeType = edges.select(col(srcCol).as("n"))
-      .union(edges.select(col(dstCol).as("n"))).schema.head.dataType
-    if (integralIds) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val bounded = edges
-        .select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-        .as[(Long, Long)]
-        .limit(DriverUnionFind.probeLimit(driverThreshold)).collect()
-      if (bounded.length <= driverThreshold) {
-        val ids = DriverUnionFind.sortedIds(bounded)
-        val root = DriverUnionFind.unionAll(ids, bounded)
-        val rows = Array.tabulate(ids.length)(i => (ids(i), ids(root(i))))
-        return DriverUnionFind.datasetOf(spark, rows.toSeq)
-          .toDF("node", "label")
-          .select(col("node").cast(nodeType).as("node"),
-            col("label").cast(nodeType).as("label"))
-      }
-    }
+  }
+
+  /** [[connectedComponents]]'s pointer-jumping loop, whatever the input
+    * size. */
+  private[graft] def connectedComponentsDistributed(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      maxRounds: Int = 50): DataFrame = {
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()

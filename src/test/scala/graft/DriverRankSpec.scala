@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * lesson, applied before the driver shortcut ships this time): the
   * driver fixed point ([[graft.operators.DriverRank]]) must reproduce
   * the distributed exact plan's every IEEE operation, because the
-  * DuckDB oracle hashes g1/g2/g3 doubles verbatim. Distributed runs are
-  * forced via `driverThreshold = 0`; equality is on raw double BITS,
+  * DuckDB oracle hashes g1/g2/g3 doubles verbatim. Distributed runs call
+  * the `…Distributed` methods by name; equality is on raw double BITS,
   * not a tolerance. */
 class DriverRankSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -41,8 +41,8 @@ class DriverRankSpec extends AnyFunSuite {
   test("pageRank exact: driver path == distributed path, bitwise (string + int ids)") {
     for (e <- Seq(stringEdges, intEdges)) {
       val drv = Graph.pageRank(e, "src", "dst", "w", iterations = 6, exact = true)
-      val dist = Graph.pageRank(e, "src", "dst", "w", iterations = 6,
-        exact = true, driverThreshold = 0)
+      val dist = Graph.pageRankDistributed(e, "src", "dst", "w",
+        iterations = 6, exact = true)
       assert(bits(drv) === bits(dist))
       // both paths emit the same column names and types (the coerced
       // src∪dst id type for integral ids — the g9/r16-advisory rule)
@@ -57,9 +57,9 @@ class DriverRankSpec extends AnyFunSuite {
     val seeds = Seq("a", "c", "zz").toDF("node")
     val drv = Graph.personalizedPageRank(
       stringEdges, "src", "dst", "w", seeds, "node", iterations = 5, exact = true)
-    val dist = Graph.personalizedPageRank(
+    val dist = Graph.personalizedPageRankDistributed(
       stringEdges, "src", "dst", "w", seeds, "node", iterations = 5,
-      exact = true, driverThreshold = 0)
+      exact = true)
     assert(bits(drv) === bits(dist))
   }
 
@@ -67,9 +67,9 @@ class DriverRankSpec extends AnyFunSuite {
     val (drv, di) = Graph.pageRankConverged(
       intEdges, "src", "dst", "w", tol = 1e-7, maxIterations = 40,
       blockIters = 5, exact = true)
-    val (dist, ei) = Graph.pageRankConverged(
+    val (dist, ei) = Graph.pageRankConvergedDistributed(
       intEdges, "src", "dst", "w", tol = 1e-7, maxIterations = 40,
-      blockIters = 5, exact = true, driverThreshold = 0)
+      blockIters = 5, exact = true)
     assert(di === ei)
     assert(bits(drv) === bits(dist))
   }
@@ -88,8 +88,8 @@ class DriverRankSpec extends AnyFunSuite {
     // the null src routes the exact run distributed; it must not throw
     // and must equal the explicitly-forced distributed run
     val a = bits(Graph.pageRank(e, "src", "dst", "w", iterations = 3, exact = true))
-    val b = bits(Graph.pageRank(e, "src", "dst", "w", iterations = 3,
-      exact = true, driverThreshold = 0))
+    val b = bits(Graph.pageRankDistributed(e, "src", "dst", "w",
+      iterations = 3, exact = true))
     assert(a === b)
   }
 }

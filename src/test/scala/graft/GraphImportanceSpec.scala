@@ -69,20 +69,37 @@ class GraphImportanceSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labs.size === 300 && labs.values.forall(_ == 0L))
     // BOTH paths pinned explicitly (r17, after the r16 driver-shortcut
-    // regression): the DISTRIBUTED loop — forced via driverThreshold = 0
+    // regression): the DISTRIBUTED loop — connectedComponentsDistributed
     // — must refuse a partial labeling LOUD on too-small maxRounds…
     val ex = intercept[IllegalArgumentException] {
-      Graph.connectedComponents(chain, "src", "dst", maxRounds = 3,
-        driverThreshold = 0)
+      Graph.connectedComponentsDistributed(chain, "src", "dst", maxRounds = 3)
     }
     assert(ex.getMessage.contains("not converged"))
     // …must converge inside the default rounds on the same chain, and
     // must agree exactly with the driver-side union-find (`labs` above,
     // which ignores maxRounds by contract — it has no partial answer)
-    val dist = Graph.connectedComponents(chain, "src", "dst",
-      driverThreshold = 0)
+    val dist = Graph.connectedComponentsDistributed(chain, "src", "dst")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist === labs)
+  }
+
+  test("connectedComponents (Graph and Dedup): a null endpoint routes distributed, no driver-collect crash") {
+    // integral ids with one null endpoint: the driver union-find cannot
+    // hold a null id, so the call must take the distributed loop (which
+    // keeps the null node) instead of failing the driver-side collect
+    val rows = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (None, Some(3L)), (Some(3L), Some(4L)))
+    def labels(df: DataFrame): Set[(Option[Long], Option[Long])] =
+      df.collect().map(r =>
+        (Option(r.get(0)).map(_.asInstanceOf[Long]),
+          Option(r.get(1)).map(_.asInstanceOf[Long]))).toSet
+    val g = graft.operators.Graph.connectedComponents(
+      rows.toDF("src", "dst"), "src", "dst")
+    assert(labels(g) === Set((Some(1L), Some(1L)), (Some(2L), Some(1L)),
+      (Some(3L), Some(3L)), (Some(4L), Some(3L)), (None, Some(3L))))
+    val d = graft.operators.Dedup.connectedComponents(rows.toDF("d1", "d2"))
+    assert(labels(d) === Set((Some(1L), Some(1L)), (Some(2L), Some(1L)),
+      (Some(3L), Some(3L)), (Some(4L), Some(3L)), (None, None)))
   }
 
   test("hits: hand-computed 2-round scores on a small bipartite graph; duplicate edges ignored") {

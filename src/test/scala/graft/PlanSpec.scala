@@ -735,10 +735,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("g1_pagerank: iterative loop plans hash/broadcast joins only, partial aggs present") {
-    // the declared query checkpoints each iteration (its final plan is an
-    // opaque RDD scan), so the gate inspects the same construction
-    // UN-checkpointed: the full 5-iteration tree must contain no nested
-    // loop anywhere and keep map-side partial aggregation
+    // the gate inspects the DISTRIBUTED construction by name, UN-checkpointed
+    // (the declared query's final plan is an opaque scan): the full
+    // 5-iteration tree must contain no nested loop anywhere and keep
+    // map-side partial aggregation
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, count, lag, lit}
     val events = spark.read.parquet(s"$sf/events.parquet")
@@ -748,12 +748,19 @@ class PlanSpec extends AnyFunSuite {
       .filter(col("prev").isNotNull)
       .groupBy(col("prev").as("src"), col("event_type").as("dst"))
       .agg(count(lit(1)).as("w"))
-    val df = graft.operators.Graph.pageRank(
+    val df = graft.operators.Graph.pageRankDistributed(
       edges, "src", "dst", "w", iterations = 5, exact = true)
     val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       p.take(3000))
     assert(p.contains("HashAggregate"), p.take(3000))
+    // the default exact run on the same few-dozen-edge graph is the
+    // driver fixed point: a bare LocalTableScan, no join, no exchange
+    val drv = graft.operators.Graph.pageRank(
+      edges, "src", "dst", "w", iterations = 5, exact = true)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(drv.contains("LocalTableScan"), drv)
+    assert(!drv.contains("Join") && !drv.contains("Exchange"), drv)
   }
 
   test("d5 clean path: the sampled probe keeps Window/sort OUT of the LSH self-join") {

@@ -592,7 +592,7 @@ class TopKDedupSpec extends AnyFunSuite {
     // nothing enters the session cache (a persisted loop would also grow
     // its lineage 3x per iteration → planner OOM on long chains)
     val star = (1 until 40).map(i => (0L, i.toLong)).toDF("d1", "d2")
-    val comps = Dedup.connectedComponents(star, maxIter = 10, driverThreshold = 10L)
+    val comps = Dedup.connectedComponentsDistributed(star, maxIter = 10)
     assert(comps.select("component").distinct().count() === 1L)
     assert(comps.filter(col("component") =!= 0L).count() === 0L)
     assert(!cached, "connectedComponents leaked loop state on the distributed path")
@@ -600,12 +600,17 @@ class TopKDedupSpec extends AnyFunSuite {
 
   test("distributed CC: pointer jumping resolves a 120-hop chain within ~log n rounds") {
     // plain O(diameter) propagation would need 120 rounds; with pointer
-    // jumping maxIter=12 (~2^12 reach) must fully converge — no warning,
+    // jumping maxIter=12 (~2^12 reach) must fully converge — no refusal,
     // one component rooted at 0
     val chain = (0 until 120).map(i => (i.toLong, (i + 1).toLong)).toDF("d1", "d2")
-    val comps = Dedup.connectedComponents(chain, maxIter = 12, driverThreshold = 10L)
+    val comps = Dedup.connectedComponentsDistributed(chain, maxIter = 12)
     assert(comps.count() === 121L)
     assert(comps.filter(col("component") =!= 0L).count() === 0L)
+    // too small a maxIter is a loud refusal, never split components
+    val ex = intercept[IllegalArgumentException] {
+      Dedup.connectedComponentsDistributed(chain, maxIter = 2)
+    }
+    assert(ex.getMessage.contains("not converged"), ex.getMessage)
   }
 
   test("distributed CC matches driver union-find on seeded random graphs") {
@@ -615,9 +620,9 @@ class TopKDedupSpec extends AnyFunSuite {
       val edges = (1 to 150).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
       val df = edges.toDF("d1", "d2")
-      val exact = Dedup.connectedComponents(df, driverThreshold = 5000000L)
+      val exact = Dedup.connectedComponents(df)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = Dedup.connectedComponents(df, maxIter = 15, driverThreshold = 1L)
+      val dist = Dedup.connectedComponentsDistributed(df, maxIter = 15)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dist === exact, s"trial $trial: distributed CC diverged from union-find")
     }
